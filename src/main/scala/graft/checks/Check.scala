@@ -16,6 +16,21 @@ import org.apache.spark.sql.types._
   */
 final case class CheckResult(violations: DataFrame, verdicts: DataFrame)
 
+/** Every check's `run` evaluates it alone. Inside [[graft.pipeline.ValidationPipeline]]
+  * checks come in two kinds:
+  *
+  *  - row-local ([[RowLocalCheck]]): violations are a function of each
+  *    row alone and verdicts a function of per-part aggregates. The
+  *    pipeline evaluates all of them together in two plans: one
+  *    projection + explode for the violations and one `groupBy(part)`
+  *    aggregate for the verdicts (and the row counts);
+  *  - everything else (uniqueness, the anti-join referential check, the
+  *    histogram drift checks) needs a shuffle or a join and is evaluated
+  *    by its own `run`.
+  *
+  * A custom check becomes row-local by extending [[RowLocalCheck]] and
+  * declaring a [[RowLocalPlan]] instead of implementing `run`.
+  */
 trait Check extends Serializable {
   def name: String
   def run(df: DataFrame): CheckResult
@@ -30,21 +45,117 @@ trait Check extends Serializable {
   def isGlobal: Boolean = false
 
   /** Inject the partition universe as a literal list (e.g. from a table
-    * catalog). Standalone `run(df)` discovers partitions itself (a
+    * catalog). Standalone `run(df)` of a check that joins its per-part
+    * results against the universe discovers partitions itself (a
     * distinct scan of the partition column); callers who know the
     * universe hand it over so that scan never happens. Default: ignore
-    * (checks that aggregate `groupBy(part)` directly never discover). */
+    * (row-local checks aggregate `groupBy(part)` directly and never
+    * discover). */
   def withKnownParts(parts: Seq[Int]): Check = this
 
   /** Inject the partition universe as a LAZY (typically cached) DataFrame
-    * instead of a literal list. THIS is the hook the pipeline uses: it
-    * folds discovery into the verdict write job — one shared cached
-    * subtree, zero dedicated upfront jobs — rather than running an eager
-    * discovery scan before any check starts. Custom checks that need a
+    * instead of a literal list. This is the hook the pipeline uses for
+    * checks that are not row-local: the universe is the pipeline's
+    * cached per-part aggregate, so no check repeats discovery. Custom checks that need a
     * partition universe should override BOTH hooks (the in-repo checks
     * do); a check overriding only withKnownParts falls back to its own
     * distinct scan inside the pipeline. Default: ignore. */
   def withPartsUniverse(parts: DataFrame): Check = this
+}
+
+/** What a row-local check contributes to one evaluation over an input.
+  * Built once per evaluation ([[RowLocalCheck.plan]]), so per-run setup —
+  * compiling a constraint spec, building a Bloom filter — happens once
+  * and is shared by the violation and verdict plans.
+  *
+  * @param violations per row, the doc id and an array of [[Check.error]]
+  *   structs (NULL or empty when the row has none); None when the check
+  *   never emits violation rows (its inputs then need no id column)
+  * @param aggregates per-part aggregate columns by name; names are
+  *   private to the check (the evaluator prefixes them per check)
+  * @param verdicts the check's verdict rows for one part, as
+  *   [[Check.verdict]] structs over its aggregates, looked up by name
+  */
+final case class RowLocalPlan(
+    violations: Option[(Column, Column)],
+    aggregates: Seq[(String, Column)],
+    verdicts: (String => Column) => Seq[Column])
+
+/** A check whose violations need only the row and whose verdicts need
+  * only per-part aggregates. Its standalone `run` is the one-check case
+  * of the same two plans the pipeline runs for all row-local checks
+  * ([[RowLocalCheck.Fused]]). */
+trait RowLocalCheck extends Check {
+  def partCol: String
+  def plan(df: DataFrame): RowLocalPlan
+
+  final def run(df: DataFrame): CheckResult = {
+    val fused = new RowLocalCheck.Fused(Seq(this), df, partCol)
+    CheckResult(fused.violations, fused.verdicts(fused.aggregate(Nil)))
+  }
+}
+
+object RowLocalCheck {
+  private val noViolations: Column =
+    array().cast(ArrayType(Check.violationType, containsNull = false))
+
+  /** Row-local checks planned once each over `df` (grouped by `partCol`
+    * cast to int) and evaluated together:
+    *
+    *  - [[violations]]: one projection of every check's doc ids and error
+    *    arrays, then one explode of their concatenation;
+    *  - [[aggregate]]: one `groupBy(part)` carrying `n_rows` plus every
+    *    check's aggregates (partial + final hash aggregate; the shuffle
+    *    carries one row per part per task), reduced to every check's
+    *    verdict structs;
+    *  - [[verdicts]]: one explode of those structs — a select over the
+    *    aggregate frame, no further input scan.
+    */
+  final class Fused(checks: Seq[RowLocalCheck], df: DataFrame, partCol: String) {
+    private val part = col(partCol).cast(IntegerType).as(Check.PartCol)
+    private val plans = checks.map(_.plan(df))
+    // two checks of one class (e.g. two StatsChecks) declare the same names
+    private def aggName(i: Int, n: String) = s"_c${i}_$n"
+
+    def violations: DataFrame = {
+      val declared = checks.zip(plans).zipWithIndex.collect {
+        case ((c, RowLocalPlan(Some((id, errs)), _, _)), i) => (c.name, id, errs, i) }
+      if (declared.isEmpty) Check.emptyViolations(df.sparkSession)
+      else {
+        // the error arrays are projected first, so the element-wise
+        // transform below reads each one instead of re-evaluating it
+        val projected = df.select(part +: declared.flatMap { case (_, id, errs, i) =>
+          Seq(id.cast(StringType).as(s"_id$i"), errs.as(s"_errs$i")) }: _*)
+        val rows = declared.map { case (name, _, _, i) =>
+          coalesce(transform(col(s"_errs$i"), e => struct(
+            col(s"_id$i").as("doc_id"), e("path").as("path"), e("keyword").as("keyword"),
+            e("message").as("message"),
+            e("additionalProperties").as("additional_properties"),
+            lit(name).as("check"))), noViolations)
+        }
+        projected.select(col(Check.PartCol), explode(concat(rows: _*)).as("v"))
+          .select(col(Check.PartCol) +:
+            Check.violationType.fieldNames.toSeq.map(n => col(s"v.$n")): _*)
+      }
+    }
+
+    /** Per part: `part`, `n_rows` and `verdicts`, the array of `extra`
+      * verdict structs (over `n_rows`) and every check's. Aggregates no
+      * verdict reads are pruned from the plan. */
+    def aggregate(extra: Seq[Column]): DataFrame = {
+      val verdicts = extra ++ plans.zipWithIndex.flatMap { case (p, i) =>
+        p.verdicts(n => col(aggName(i, n))) }
+      df.groupBy(part)
+        .agg(count(lit(1)).as("n_rows"), plans.zipWithIndex.flatMap { case (p, i) =>
+          p.aggregates.map { case (n, c) => c.as(aggName(i, n)) } }: _*)
+        .select(col(Check.PartCol), col("n_rows"), array(verdicts: _*).as("verdicts"))
+    }
+
+    /** The verdict rows of an [[aggregate]] frame. */
+    def verdicts(agg: DataFrame): DataFrame =
+      agg.select(col(Check.PartCol), explode(col("verdicts")).as("v")).select(
+        Check.PartCol, "v.check", "v.passed", "v.violation_count", "v.metric_value")
+  }
 }
 
 object Check {
@@ -97,6 +208,23 @@ object Check {
            coalesce(col("metric_value"), lit(null).cast(DoubleType))
          else metricValue).as("metric_value"))
   }
+
+  /** One violation row without its part. */
+  val violationType: StructType = StructType(violationsSchema.fields.tail)
+
+  /** One error record of a [[RowLocalPlan]]'s per-row error array: the
+    * shape of [[graft.compile.ConstraintCompiler]]'s `errors` elements. */
+  def error(path: String, keyword: String, message: String,
+            additionalProperties: Column): Column =
+    struct(lit(path).as("path"), lit(keyword).as("keyword"), lit(message).as("message"),
+      additionalProperties.cast(StringType).as("additionalProperties"))
+
+  /** One verdict row without its part (see [[CheckResult]]). */
+  def verdict(check: String, passed: Column, violationCount: Column,
+              metricValue: Column = lit(null)): Column =
+    struct(lit(check).as("check"), passed.as("passed"),
+      violationCount.cast(LongType).as("violation_count"),
+      metricValue.cast(DoubleType).as("metric_value"))
 
   def emptyViolations(spark: org.apache.spark.sql.SparkSession): DataFrame =
     spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), violationsSchema)

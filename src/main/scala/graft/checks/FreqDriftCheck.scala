@@ -1,9 +1,9 @@
 package graft.checks
 
 import graft.sketch.{FreqFunctions, FreqSketch}
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.StringType
 
 /** Categorical drift against a PERSISTED frequency profile — the
   * [[SketchDriftCheck]] twin for string columns: the reference side is a
@@ -11,8 +11,8 @@ import org.apache.spark.sql.types._
   * the profile/checkpoint table), the observed side aggregates one
   * bounded sketch per partition (partial+final hash agg; the shuffle
   * carries blobs, never the category key space), and a chi²-style
-  * statistic over the PROFILE's categories is computed driver-side on
-  * the collected blobs.
+  * statistic over the PROFILE's categories is scored in the plan by
+  * `freq_chi2` against the profile literal — nothing is collected.
   *
   * Cells are the profile's surviving categories PLUS an "other" cell
   * holding the mass outside them (totalSeen − Σ entries, both sides), so
@@ -35,36 +35,20 @@ final case class FreqDriftCheck(
     referenceSketch: Array[Byte],
     threshold: Double,
     capacity: Int = FreqSketch.DefaultCapacity,
-    partCol: String = Check.PartCol) extends Check {
+    partCol: String = Check.PartCol) extends RowLocalCheck {
 
   val name = s"drift_freq_chi2:$column"
 
-  def run(df: DataFrame): CheckResult = {
-    val spark = df.sparkSession
-    val ref = FreqSketch.deserialize(referenceSketch)
-
-    val perPart = df
-      .where(col(partCol).isNotNull)
-      .groupBy(col(partCol).cast(IntegerType).as("part"))
-      .agg(FreqFunctions.freq_sketch(col(column).cast(StringType), capacity)
-        .as("sketch"))
-      .collect()
-
-    val rows = perPart.toSeq.filterNot(_.isNullAt(0)).map { r =>
-      val obs = FreqSketch.deserialize(r.getAs[Array[Byte]]("sketch"))
-      val chi2 = FreqDriftCheck.chiSquare(obs, ref)
-      Row(r.getInt(0), name, chi2 <= threshold, 0L, chi2)
-    }
-
-    val schema = StructType(Seq(
-      StructField("part", IntegerType),
-      StructField("check", StringType),
-      StructField("passed", BooleanType),
-      StructField("violation_count", LongType),
-      StructField("metric_value", DoubleType)))
-    import scala.jdk.CollectionConverters._
-    CheckResult(Check.emptyViolations(spark),
-      spark.createDataFrame(rows.asJava, schema))
+  def plan(df: DataFrame): RowLocalPlan = {
+    FreqSketch.deserialize(referenceSketch) // validate before shipping
+    RowLocalPlan(
+      violations = None,
+      aggregates = Seq("sketch" ->
+        FreqFunctions.freq_sketch(col(column).cast(StringType), capacity)),
+      verdicts = agg => {
+        val chi2 = FreqFunctions.freq_chi2(agg("sketch"), lit(referenceSketch))
+        Seq(Check.verdict(name, chi2 <= threshold, lit(0L), chi2))
+      })
   }
 }
 

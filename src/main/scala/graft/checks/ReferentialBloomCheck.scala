@@ -26,14 +26,9 @@ final case class ReferentialBloomCheck(
     fpp: Double = 0.001,
     activeCol: Option[String] = Some("active"),
     partCol: String = Check.PartCol,
-    idCol: String = Check.IdCol,
-    knownParts: Seq[Int] = Nil,
-    partsUniverse: Option[DataFrame] = None) extends Check {
+    idCol: String = Check.IdCol) extends RowLocalCheck {
 
   val name = "referential_bloom"
-  override def withKnownParts(parts: Seq[Int]): Check = copy(knownParts = parts)
-  override def withPartsUniverse(parts: DataFrame): Check =
-    copy(partsUniverse = Some(parts))
 
   /** One aggregation over the dimension → the serialized filter.
     * Driver-held and bounded by the sized bit count, not the key count's
@@ -47,52 +42,39 @@ final case class ReferentialBloomCheck(
       col(dimKeyCol).cast("string"), expectedKeys, fpp)).head().getAs[Array[Byte]](0)
   }
 
-  def run(df: DataFrame): CheckResult =
-    ReferentialBloomCheck.fromBlob(buildFilter(), fkCol, dimKeyCol,
-      partCol, idCol, knownParts, partsUniverse).run(df)
+  /** Builds the filter (one job over the dimension) once per plan. */
+  def plan(df: DataFrame): RowLocalPlan =
+    ReferentialBloomCheck.fromBlob(buildFilter(), fkCol, dimKeyCol, partCol, idCol).plan(df)
 }
 
 object ReferentialBloomCheck {
 
   /** The probe side alone, against a prebuilt (possibly persisted)
-    * filter blob — the incremental-run shape. */
+    * filter blob — the incremental-run shape. A NULL key is not a
+    * violation (missing ≡ NULL is owned by `required`). */
   final case class FromBlob(
       blob: Array[Byte],
       fkCol: String,
       dimKeyCol: String,
       partCol: String = Check.PartCol,
-      idCol: String = Check.IdCol,
-      knownParts: Seq[Int] = Nil,
-      partsUniverse: Option[DataFrame] = None) extends Check {
+      idCol: String = Check.IdCol) extends RowLocalCheck {
 
     val name = "referential_bloom"
-    override def withKnownParts(parts: Seq[Int]): Check = copy(knownParts = parts)
-    override def withPartsUniverse(parts: DataFrame): Check =
-      copy(partsUniverse = Some(parts))
 
-    def run(df: DataFrame): CheckResult = {
+    def plan(df: DataFrame): RowLocalPlan = {
       BloomSketch.deserialize(blob) // validate geometry before shipping
-      val violations = df
-        .where(!BloomFunctions.bloom_contains(lit(blob),
-          col(fkCol).cast("string")))
-        .select(
-          col(partCol).as("part"),
-          col(idCol).cast("string").as("doc_id"),
-          lit(fkCol).as("path"),
-          lit("referential").as("keyword"),
-          lit(s"value not in dimension '$dimKeyCol' (bloom-definite)").as("message"),
-          col(fkCol).cast("string").as("additional_properties"),
-          lit(name).as("check"))
-      val perPart = violations.groupBy("part").agg(count(lit(1)).as("violation_count"))
-      CheckResult(violations,
-        Check.verdictsFromCounts(df, perPart, name,
-          knownParts = knownParts, partCol = partCol, universe = partsUniverse))
+      val missing = !BloomFunctions.bloom_contains(lit(blob), col(fkCol).cast("string"))
+      RowLocalPlan(
+        violations = Some(col(idCol) -> when(missing, array(Check.error(fkCol,
+          "referential", s"value not in dimension '$dimKeyCol' (bloom-definite)",
+          col(fkCol))))),
+        aggregates = Seq("violations" -> count_if(missing)),
+        verdicts = agg => Seq(Check.verdict(name, agg("violations") === 0L,
+          agg("violations"))))
     }
   }
 
   def fromBlob(blob: Array[Byte], fkCol: String, dimKeyCol: String,
-               partCol: String = Check.PartCol, idCol: String = Check.IdCol,
-               knownParts: Seq[Int] = Nil,
-               partsUniverse: Option[DataFrame] = None): FromBlob =
-    FromBlob(blob, fkCol, dimKeyCol, partCol, idCol, knownParts, partsUniverse)
+               partCol: String = Check.PartCol, idCol: String = Check.IdCol): FromBlob =
+    FromBlob(blob, fkCol, dimKeyCol, partCol, idCol)
 }

@@ -13,48 +13,26 @@ import org.apache.spark.sql.types.DoubleType
   * Scale notes: the validator is a pure projection (narrow, whole-stage
   * codegen, zero shuffle); the verdict aggregation shuffles only
   * `(part, valid-count, violation-count)` partials — bytes per partition,
-  * not per row. Violations are produced by the same single scan.
+  * not per row. The spec compiles once per evaluation, shared by the
+  * violation array and the aggregates; the error path runs only for
+  * invalid rows.
   */
 final case class RowConstraintCheck(
     validator: Validator,
     partCol: String = Check.PartCol,
-    idCol: String = Check.IdCol) extends Check {
+    idCol: String = Check.IdCol) extends RowLocalCheck {
 
   val name = "row_constraint"
 
-  def run(df: DataFrame): CheckResult = {
-    val (validCol, errsCol) = {
-      val c = graft.compile.ConstraintCompiler.compile(validator.spec, df.schema, validator.options)
-      (c.valid, c.errors)
-    }
-    val validated = df.select(
-      col(partCol), col(idCol), validCol.as("valid"), errsCol.as("errors"))
-
-    val violations = validated
-      .where(!col("valid"))
-      .select(
-        col(partCol).as("part"),
-        col(idCol).cast("string").as("doc_id"),
-        explode(col("errors")).as("error"))
-      .select(
-        col("part"), col("doc_id"),
-        col("error.path").as("path"),
-        col("error.keyword").as("keyword"),
-        col("error.message").as("message"),
-        col("error.additionalProperties").as("additional_properties"),
-        lit(name).as("check"))
-
-    val verdicts = validated
-      .groupBy(col(partCol).as("part"))
-      .agg(
-        bool_and(col("valid")).as("passed"),
-        sum(when(col("valid"), lit(0L)).otherwise(size(col("errors")).cast("long")))
-          .as("violation_count"),
-        avg(col("valid").cast(DoubleType)).as("metric_value")) // valid-rate
-      .select(lit(name).as("check"), col("part"), col("passed"),
-        col("violation_count"), col("metric_value"))
-      .select("part", "check", "passed", "violation_count", "metric_value")
-
-    CheckResult(violations, verdicts)
+  def plan(df: DataFrame): RowLocalPlan = {
+    val c = graft.compile.ConstraintCompiler.compile(validator.spec, df.schema, validator.options)
+    RowLocalPlan(
+      violations = Some(col(idCol) -> c.errors),
+      aggregates = Seq(
+        "passed" -> bool_and(c.valid),
+        "violations" -> sum(when(c.valid, lit(0L)).otherwise(size(c.errors).cast("long"))),
+        "valid_rate" -> avg(c.valid.cast(DoubleType))),
+      verdicts = agg => Seq(Check.verdict(name, agg("passed"), agg("violations"),
+        agg("valid_rate"))))
   }
 }

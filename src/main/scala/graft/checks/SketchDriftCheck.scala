@@ -1,9 +1,9 @@
 package graft.checks
 
 import graft.sketch.{functions => gf, KllSketch}
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.DoubleType
 
 /** KS drift against a PERSISTED reference profile: the reference side is a
   * serialized [[KllSketch]] (built once from a clean sample and stored in
@@ -13,50 +13,34 @@ import org.apache.spark.sql.types._
   *
   * The observed side aggregates one sketch per partition (partial+final
   * hash agg, shuffle carries one blob per partition per task); the KS
-  * statistic between two sketches is computed on the collected blobs —
-  * at most `parts × O(k)` driver work on a few KB each.
+  * statistic against the profile literal is scored in the plan by
+  * `kll_ks`, on aggregated rows only — nothing is collected.
   */
 final case class SketchDriftCheck(
     column: String,
     referenceSketch: Array[Byte],
     threshold: Double = 0.05,
     k: Int = KllSketch.DefaultK,
-    partCol: String = Check.PartCol) extends Check {
+    partCol: String = Check.PartCol) extends RowLocalCheck {
 
   val name = s"drift_kll_ks:$column"
 
-  def run(df: DataFrame): CheckResult = {
-    val spark = df.sparkSession
-    val ref = KllSketch.deserialize(referenceSketch)
-
-    // null partitions are filtered (a NULL group would null-unbox to a
-    // fabricated part-0 verdict) and the partition column is cast to int
-    // explicitly; a non-castable part value fails the job under ANSI mode
-    // (clear error) rather than a driver ClassCastException. The driver
-    // map still skips any cast-produced NULL group defensively (non-ANSI
-    // sessions turn bad strings into NULL instead of throwing).
-    val perPart = df
-      .where(col(partCol).isNotNull)
-      .groupBy(col(partCol).cast(IntegerType).as("part"))
-      .agg(gf.kll_sketch(col(column).cast(DoubleType), k).as("sketch"))
-      .collect()
-
-    val rows = perPart.toSeq.filterNot(_.isNullAt(0)).map { r =>
-      val obs = KllSketch.deserialize(r.getAs[Array[Byte]]("sketch"))
-      val d = KllSketch.ksDistance(obs, ref)
-      Row(r.getInt(0), name, d <= threshold, 0L, d)
-    }
-
-    val schema = StructType(Seq(
-      StructField("part", IntegerType),
-      StructField("check", StringType),
-      StructField("passed", BooleanType),
-      StructField("violation_count", LongType),
-      StructField("metric_value", DoubleType)))
-    import scala.jdk.CollectionConverters._
-    val verdicts = spark.createDataFrame(rows.asJava, schema)
-
-    CheckResult(Check.emptyViolations(spark), verdicts)
+  def plan(df: DataFrame): RowLocalPlan = {
+    // kll_ks is NULL when either sketch is empty; KllSketch.ksDistance
+    // reads 0.0 for two empty sketches and 1.0 for one (an all-NULL part
+    // drifts maximally)
+    val emptyRef = KllSketch.deserialize(referenceSketch).isEmpty
+    def distance(sketch: Column): Column = coalesce(
+      gf.kll_ks(sketch, lit(referenceSketch)),
+      if (emptyRef) when(gf.kll_cdf(sketch, Seq(0.0)).isNull, lit(0.0)).otherwise(lit(1.0))
+      else lit(1.0))
+    RowLocalPlan(
+      violations = None,
+      aggregates = Seq("sketch" -> gf.kll_sketch(col(column).cast(DoubleType), k)),
+      verdicts = agg => {
+        val d = distance(agg("sketch"))
+        Seq(Check.verdict(name, d <= threshold, lit(0L), d))
+      })
   }
 }
 

@@ -22,72 +22,57 @@ final case class ColumnStatsSpec(
 
 final case class StatsCheck(
     columns: Seq[ColumnStatsSpec],
-    partCol: String = Check.PartCol) extends Check {
+    partCol: String = Check.PartCol) extends RowLocalCheck {
 
   val name = "stats"
 
-  def run(df: DataFrame): CheckResult = {
-    val spark = df.sparkSession
+  def plan(df: DataFrame): RowLocalPlan = {
+    def isNum(s: ColumnStatsSpec): Boolean =
+      df.schema(s.column).dataType.isInstanceOf[NumericType]
+    def wantsQuantiles(s: ColumnStatsSpec): Boolean = s.quantiles.nonEmpty && isNum(s)
 
-    def wantsQuantiles(s: ColumnStatsSpec): Boolean =
-      s.quantiles.nonEmpty &&
-        df.schema(s.column).dataType.isInstanceOf[NumericType]
-
-    val aggs: Seq[Column] = columns.flatMap { s =>
+    val aggs: Seq[(String, Column)] = columns.flatMap { s =>
       val c = col(s.column)
-      val isNum = df.schema(s.column).dataType.isInstanceOf[NumericType]
       Seq(
-        count(lit(1)).as(s"${s.column}__rows"),
-        sum(c.isNull.cast(LongType)).as(s"${s.column}__nulls"),
-        (if (isNum) min(c).cast(DoubleType) else lit(null).cast(DoubleType))
-          .as(s"${s.column}__min"),
-        (if (isNum) max(c).cast(DoubleType) else lit(null).cast(DoubleType))
-          .as(s"${s.column}__max"),
-        approx_count_distinct(c).as(s"${s.column}__distinct")) ++
+        s"${s.column}__rows" -> count(lit(1)),
+        s"${s.column}__nulls" -> sum(c.isNull.cast(LongType)),
+        s"${s.column}__min" ->
+          (if (isNum(s)) min(c).cast(DoubleType) else lit(null).cast(DoubleType)),
+        s"${s.column}__max" ->
+          (if (isNum(s)) max(c).cast(DoubleType) else lit(null).cast(DoubleType))) ++
         (if (wantsQuantiles(s))
-          Seq(graft.sketch.functions.kll_quantiles(
-            graft.sketch.functions.kll_sketch(c), s.quantiles)
-            .as(s"${s.column}__quantiles"))
+          Seq(s"${s.column}__quantiles" -> graft.sketch.functions.kll_quantiles(
+            graft.sketch.functions.kll_sketch(c), s.quantiles))
          else Seq.empty)
     }
-
-    val agg = df.groupBy(col(partCol).as("part")).agg(aggs.head, aggs.tail: _*)
 
     // one verdict row per (part, column): passed = every assertion holds.
     // Columns with quantiles configured emit one extra informational row
     // per quantile (KLL estimate as metric_value, sanity-passed when it
     // sits inside [min, max]).
-    val quantileVerdicts: Seq[DataFrame] = columns.filter(wantsQuantiles).flatMap { s =>
+    def verdicts(agg: String => Column): Seq[Column] = columns.map { s =>
+      val nulls = agg(s"${s.column}__nulls")
+      val lo = agg(s"${s.column}__min")
+      val hi = agg(s"${s.column}__max")
+      val nullRate = nulls.cast(DoubleType) / agg(s"${s.column}__rows")
+      val assertions = Seq(
+        s.maxNullRate.map(r => nullRate <= lit(r)),
+        s.min.map(m => lo.isNull || lo >= lit(m)),
+        s.max.map(m => hi.isNull || hi <= lit(m)))
+        .flatten
+      val passed = assertions.foldLeft(lit(true))(_ && _)
+      Check.verdict(s"$name:${s.column}", passed,
+        when(passed, lit(0L)).otherwise(nulls), nullRate)
+    } ++ columns.filter(wantsQuantiles).flatMap { s =>
       s.quantiles.zipWithIndex.map { case (p, i) =>
-        val est = element_at(col(s"${s.column}__quantiles"), i + 1)
+        val est = element_at(agg(s"${s.column}__quantiles"), i + 1)
         val inRange = est.isNull ||
-          (est >= col(s"${s.column}__min") && est <= col(s"${s.column}__max"))
-        agg.select(
-          col("part"),
-          lit(s"$name:${s.column}:q$p").as("check"),
-          inRange.as("passed"),
-          lit(0L).as("violation_count"),
-          est.as("metric_value"))
+          (est >= agg(s"${s.column}__min") && est <= agg(s"${s.column}__max"))
+        Check.verdict(s"$name:${s.column}:q$p", inRange, lit(0L), est)
       }
     }
 
-    val verdicts = (columns.map { s =>
-      val nullRate = col(s"${s.column}__nulls").cast(DoubleType) / col(s"${s.column}__rows")
-      val assertions = Seq(
-        s.maxNullRate.map(r => nullRate <= lit(r)),
-        s.min.map(m => col(s"${s.column}__min").isNull || col(s"${s.column}__min") >= lit(m)),
-        s.max.map(m => col(s"${s.column}__max").isNull || col(s"${s.column}__max") <= lit(m)))
-        .flatten
-      val passed = assertions.foldLeft(lit(true))(_ && _)
-      agg.select(
-        col("part"),
-        lit(s"$name:${s.column}").as("check"),
-        passed.as("passed"),
-        when(passed, lit(0L)).otherwise(col(s"${s.column}__nulls")).as("violation_count"),
-        nullRate.as("metric_value"))
-    } ++ quantileVerdicts).reduce(_ unionAll _)
-
-    CheckResult(Check.emptyViolations(spark), verdicts)
+    RowLocalPlan(None, aggs, verdicts)
   }
 
   /** Wide per-partition profile (all stats as columns) — reusable as a

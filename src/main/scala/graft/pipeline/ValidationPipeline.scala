@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.checks.{Check, CheckResult}
+import graft.checks.{Check, CheckResult, RowLocalCheck}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -14,6 +14,15 @@ import org.apache.spark.sql.functions._
   * Output writes use dynamic partition overwrite so a crash between write
   * and commit re-runs idempotently: the re-run overwrites exactly the
   * partitions it recomputes, never duplicating rows.
+  *
+  * Pass structure over the pending input: the row-local checks
+  * ([[graft.checks.RowLocalCheck]] with the pipeline's partition column)
+  * share one projection, whose exploded violation arrays feed the
+  * violations write, and one `groupBy(part)` aggregate, which carries the
+  * row counts and every such check's aggregates and feeds the verdicts
+  * write. Every other check (uniqueness, anti-join referential, histogram
+  * drift) then runs its own plan via `run`. With only row-local checks a
+  * run reads its input twice.
   *
   * The `tokens` column is never projected through a transformation — checks
   * only read it — so the per-row byte-identity invariant of BASELINE.json
@@ -53,7 +62,6 @@ final case class PipelineResult(
     rowsValidated: Long)
 
 final class ValidationPipeline(checks: Seq[Check], cfg: PipelineConfig) {
-  import org.apache.spark.sql.types.DoubleType
 
   def run(input0: DataFrame): PipelineResult = {
     // schema-contract pre-flight: driver-side metadata only, fail fast
@@ -93,31 +101,29 @@ final class ValidationPipeline(checks: Seq[Check], cfg: PipelineConfig) {
         Seq.empty, committed.toSeq.sorted, 0L)
     }
 
-    // Per-partition row counts, LAZY and cached: the aggregation runs
-    // inside the verdict write job (one shared subtree, cached for the
-    // other consumers below) instead of a dedicated eager full-input
-    // pre-count job — at 10^12 rows that job was a whole extra pass made
-    // solely for commit metadata. The same frame doubles as (a) the
-    // `row_count` verdict rows, (b) the partition universe injected into
-    // every check, and (c) the commit metadata collected from cache after
-    // the writes.
-    val rowCounts = pending
-      .groupBy(col(cfg.partCol).cast("int").as("part"))
-      .agg(count(lit(1)).as("n_rows"))
-      .persist()
-    val universe = rowCounts.select(col("part"))
-    val rowCountVerdicts = rowCounts.select(
-      col("part"),
-      lit("row_count").as("check"),
-      lit(true).as("passed"),
-      lit(0L).as("violation_count"),
-      col("n_rows").cast(DoubleType).as("metric_value"))
-
+    // Row-local checks whose partition column is the pipeline's are
+    // evaluated together: every violation array in one projection over
+    // `pending`, every per-part aggregate in one `groupBy(part)` that also
+    // counts rows. That aggregate (reduced to row counts and verdict
+    // structs) is LAZY and cached: it runs inside the verdict write job
+    // and then serves (a) every fused check's verdicts and the
+    // `row_count` verdicts, (b) the partition universe injected
+    // into the other checks, and (c) the commit metadata collected from
+    // cache after the writes — no dedicated pre-count pass over the input.
+    val (fusable, separate) = checks.partitionMap {
+      case c: RowLocalCheck if c.partCol == cfg.partCol => Left(c)
+      case c => Right(c)
+    }
     val t0 = System.nanoTime()
+    val fused = new RowLocalCheck.Fused(fusable, pending, cfg.partCol)
+    val perPart = fused.aggregate(
+      Seq(Check.verdict("row_count", lit(true), lit(0L), col("n_rows")))).persist()
+    val universe = perPart.select(col("part"))
+
     // global checks see the full input (cross-partition semantics) but
     // report only for uncommitted partitions; local checks scan pending
     // only. The universe frame is injected so no check repeats discovery.
-    val results: Seq[CheckResult] = checks.map(_.withPartsUniverse(universe)).map { c =>
+    val results: Seq[CheckResult] = separate.map(_.withPartsUniverse(universe)).map { c =>
       if (c.isGlobal && committed.nonEmpty) {
         val r = c.run(input)
         CheckResult(
@@ -125,38 +131,45 @@ final class ValidationPipeline(checks: Seq[Check], cfg: PipelineConfig) {
           r.verdicts.where(!col("part").isin(committed.toSeq: _*)))
       } else c.run(pending)
     }
-    val violationsAll = results.map(_.violations).reduce(_ unionAll _)
+    val violationsAll = (fused.violations +: results.map(_.violations)).reduce(_ unionAll _)
     val violations = cfg.maxViolationsPerPart match {
       case Some(k) => ValidationPipeline.capViolations(violationsAll, k)
       case None    => violationsAll
     }
-    val verdicts = (results.map(_.verdicts) :+ rowCountVerdicts).reduce(_ unionAll _)
+    val verdicts = (fused.verdicts(perPart) +: results.map(_.verdicts)).reduce(_ unionAll _)
 
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     // The two output tables are INDEPENDENT jobs writing disjoint paths —
     // submit them from two driver threads so the verdict job's tasks
     // back-fill executors freed by the violation job's straggler tail
-    // (guide §2.6 overlap-independent-jobs; actions were only sequential
-    // because this code called them sequentially). Output bytes, paths
-    // and commit semantics are unchanged; a failure in either write
-    // fails the run before any partition commits, exactly as before.
-    val vioErr = new java.util.concurrent.atomic.AtomicReference[Throwable]()
-    val vioThread = new Thread(() =>
-      try violations.write.mode("overwrite").partitionBy("part")
-        .parquet(s"${cfg.outputDir}/violations")
-      catch { case t: Throwable => vioErr.set(t) })
-    vioThread.start()
-    try verdicts.write.mode("overwrite").partitionBy("part")
-      .parquet(s"${cfg.outputDir}/verdicts")
-    finally vioThread.join()
-    if (vioErr.get() != null) throw vioErr.get()
+    // (guide §2.6 overlap-independent-jobs). A failure in either write
+    // fails the run before any partition commits; when both fail, the
+    // violations error rides the verdicts error as a suppressed
+    // exception. A failed run can leave the two output dirs from
+    // different runs (either write may have finished); the re-run's
+    // dynamic overwrite replaces both for every uncommitted partition.
+    val partCounts = try {
+      val vioErr = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+      val vioThread = new Thread(() =>
+        try violations.write.mode("overwrite").partitionBy("part")
+          .parquet(s"${cfg.outputDir}/violations")
+        catch { case t: Throwable => vioErr.set(t) })
+      vioThread.start()
+      try verdicts.write.mode("overwrite").partitionBy("part")
+        .parquet(s"${cfg.outputDir}/verdicts")
+      catch { case t: Throwable =>
+        vioThread.join()
+        Option(vioErr.get()).filter(_ ne t).foreach(t.addSuppressed)
+        throw t
+      } finally vioThread.join()
+      if (vioErr.get() != null) throw vioErr.get()
+      // commit metadata comes from the cache the verdict write populated —
+      // a KB-sized read, not another input scan
+      perPart.select("part", "n_rows").collect()
+        .map(r => r.getInt(0) -> r.getLong(1)).toMap
+    } finally perPart.unpersist(false)
 
     val elapsed = (System.nanoTime() - t0) / 1e9
-    // commit metadata comes from the cache the verdict write populated —
-    // a KB-sized read, not another input scan
-    val partCounts = rowCounts.collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    rowCounts.unpersist(false)
     val pendingParts = partCounts.keys.toSeq.sorted
     val totalRows = partCounts.values.sum
     val rate = if (elapsed > 0) totalRows / elapsed else 0.0

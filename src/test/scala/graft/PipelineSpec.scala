@@ -3,6 +3,7 @@ package graft
 import graft.checks._
 import graft.data.TokenTable
 import graft.pipeline._
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -323,21 +324,198 @@ class PipelineSpec extends SparkSpec {
     assert(viol.where(col("part") =!= 4).count() == committedViol)
   }
 
-  test("no dedicated pre-count pass: the input is scanned only by the checks") {
-    // TEST-ONLY instrumentation: a row-counting UDF filter measures how
-    // many times the pipeline scans its input (engine code has no UDFs)
+  /** How many times a pipeline run over `checks` reads its input.
+    * TEST-ONLY instrumentation: a row-counting UDF filter (engine code
+    * has no UDFs). */
+  def inputReads(checks: Seq[Check]): Double = {
     val dir = Files.createTempDirectory("graft-pipe-scan").toString
-    val pcfg = PipelineConfig(s"$dir/ckpt", s"$dir/out")
     val acc = spark.sparkContext.longAccumulator("graft-scan-rows")
     val countRows = udf { () => acc.add(1); true }.asNondeterministic()
-    val instrumented = table.filter(countRows())
-    new ValidationPipeline(Seq(RowConstraintCheck(validator)), pcfg).run(instrumented)
-    // RowConstraintCheck scans the input twice (violations write + verdict
-    // aggregation) and the folded row_count aggregation adds one; commit
-    // metadata is then served from the row_count cache. The old pipeline's
-    // dedicated eager pre-count job made this 4x.
-    assert(acc.value == 3 * cfg.rows,
-      s"input scanned ${acc.value.toDouble / cfg.rows}x — expected exactly 3x")
+    new ValidationPipeline(checks, PipelineConfig(s"$dir/ckpt", s"$dir/out"))
+      .run(table.filter(countRows()))
+    acc.value.toDouble / cfg.rows
+  }
+
+  /** The benchmark's standard set: row constraints, salted uniqueness,
+    * Bloom referential, KLL drift and column stats. */
+  def standardChecks: Seq[Check] = Seq(
+    RowConstraintCheck(validator),
+    UniquenessCheck("doc_id"),
+    ReferentialBloomCheck("source", vocab, "source", expectedKeys = cfg.numSources.toLong),
+    SketchDriftCheck("n_tok", SketchDriftCheck.buildProfile(
+      TokenTable.generate(spark, cfg.copy(seed = 7L)), "n_tok")),
+    StatsCheck(Seq(
+      ColumnStatsSpec("n_tok", min = Some(1)),
+      ColumnStatsSpec("doc_id", maxNullRate = Some(0.5)))))
+
+  test("no dedicated pre-count pass: the input is scanned only by the checks") {
+    // the violation projection and the per-part aggregate (which also
+    // counts rows) each read the input once; commit metadata is then
+    // served from the aggregate's cache
+    assert(inputReads(Seq(RowConstraintCheck(validator))) == 2.0)
+    // the four row-local checks add no read; uniqueness reads the input
+    // twice for its violations and twice more for its verdicts
+    assert(inputReads(standardChecks) == 6.0)
+  }
+
+  /** Asserts that a pipeline run writes, row for row, the union of the
+    * checks' standalone `run` outputs (plus the `row_count` verdicts).
+    * Returns the written verdicts. */
+  def assertFusedParity(checks: Seq[Check], input: DataFrame): Seq[Row] = {
+    val dir = Files.createTempDirectory("graft-pipe-parity").toString
+    new ValidationPipeline(checks, PipelineConfig(s"$dir/ckpt", s"$dir/out")).run(input)
+    def violationRows(df: DataFrame) = df.select(
+      Seq(col("part").cast("int")) ++ Check.violationType.fieldNames.map(col): _*)
+      .collect().map(_.toString).sorted.toSeq
+    val verdictCols = Seq(col("part").cast("int"), col("check"), col("passed"),
+      col("violation_count"), col("metric_value"))
+    def verdictRows(df: DataFrame) = df.select(verdictCols: _*).collect().toSeq
+    val standalone = checks.map(_.run(input))
+    val written = spark.read.schema(Check.violationsSchema)
+      .parquet(s"$dir/out/violations")
+    assert(violationRows(written) ==
+      violationRows(standalone.map(_.violations).reduce(_ unionAll _)))
+    val verdicts = verdictRows(spark.read.parquet(s"$dir/out/verdicts"))
+    val rowCounts = input.groupBy(col("part").cast("int")).count().collect()
+      .map(r => Row(r.getInt(0), "row_count", true, 0L, r.getLong(1).toDouble)).toSeq
+    assert(verdicts.map(_.toString).sorted ==
+      (standalone.flatMap(r => verdictRows(r.verdicts)) ++ rowCounts).map(_.toString).sorted)
+    verdicts
+  }
+
+  test("fusion parity: the standard set") {
+    val verdicts = assertFusedParity(standardChecks, table)
+    assert(verdicts.map(_.getString(1)).distinct.sorted == Seq("drift_kll_ks:n_tok",
+      "referential_bloom", "row_constraint", "row_count", "stats:doc_id", "stats:n_tok",
+      "uniqueness"))
+  }
+
+  test("fusion parity: two StatsChecks over the same columns keep their own aggregates") {
+    val verdicts = assertFusedParity(Seq(
+      StatsCheck(Seq(ColumnStatsSpec("n_tok", min = Some(1), quantiles = Seq(0.5)))),
+      StatsCheck(Seq(ColumnStatsSpec("n_tok", max = Some(3), quantiles = Seq(0.9))))), table)
+    val byCheck = verdicts.groupBy(_.getString(1)).map { case (c, rs) => c -> rs.length }
+    assert(byCheck("stats:n_tok") == 2 * cfg.parts)
+    // the max=3 assertion fails everywhere, min=1 passes somewhere: the
+    // two checks' verdicts differ, so neither read the other's aggregates
+    val passed = verdicts.filter(_.getString(1) == "stats:n_tok").map(_.getBoolean(2))
+    assert(passed.contains(true) && passed.contains(false))
+  }
+
+  test("fusion parity: an all-NULL drift column reads D = ksDistance (1.0, or 0.0 " +
+       "against an empty profile)") {
+    import graft.sketch.KllSketch
+    val nullPart0 = table.withColumn("n_tok",
+      when(col("part") === 0, lit(null).cast("int")).otherwise(col("n_tok")))
+    val profile = SketchDriftCheck.buildProfile(
+      TokenTable.generate(spark, cfg.copy(seed = 7L)), "n_tok")
+    val emptyProfile = SketchDriftCheck.buildProfile(table.where(lit(false)), "n_tok")
+    val empty = KllSketch.empty()
+    val nonEmpty = KllSketch.deserialize(profile)
+    for ((ref, want0) <- Seq(
+        profile -> KllSketch.ksDistance(empty, nonEmpty),
+        emptyProfile -> KllSketch.ksDistance(empty, empty))) {
+      val verdicts = assertFusedParity(Seq(SketchDriftCheck("n_tok", ref)), nullPart0)
+        .filter(_.getString(1) == "drift_kll_ks:n_tok")
+      val part0 = verdicts.find(_.getInt(0) == 0).get
+      assert(part0.getDouble(4) == want0, s"all-NULL part: $part0")
+      assert(part0.getBoolean(2) == (want0 <= 0.05))
+      if (ref eq emptyProfile)
+        assert(verdicts.filter(_.getInt(0) != 0).forall(_.getDouble(4) == 1.0))
+    }
+  }
+
+  test("fusion parity: a NULL referential key is not a Bloom violation") {
+    val nullSources = table.withColumn("source",
+      when(pmod(xxhash64(col("doc_id")), lit(5)) === 0, lit(null)).otherwise(col("source")))
+    // sized so the screen is exact on this data
+    val check = ReferentialBloomCheck("source", vocab, "source",
+      expectedKeys = cfg.numSources.toLong, fpp = 1e-8)
+    val verdicts = assertFusedParity(Seq(check), nullSources)
+    val vio = check.run(nullSources).violations
+    assert(vio.where(col("additional_properties").isNull).count() == 0)
+    val active = vocab.where(col("active")).select("source")
+    val expected = nullSources.where(col("source").isNotNull)
+      .join(active, Seq("source"), "left_anti").count()
+    assert(verdicts.filter(_.getString(1) == "referential_bloom").map(_.getLong(3)).sum ==
+      expected)
+  }
+
+  test("fusion parity: FreqDriftCheck scores chi2 in the plan") {
+    import graft.sketch.FreqSketch
+    val profile = FreqDriftCheck.buildProfile(
+      TokenTable.generate(spark, cfg.copy(seed = 7L)), "source", capacity = 64)
+    val check = FreqDriftCheck("source", profile, threshold = 50.0, capacity = 64)
+    val verdicts = assertFusedParity(Seq(check, RowConstraintCheck(validator)), table)
+      .filter(_.getString(1) == "drift_freq_chi2:source")
+    // the in-plan statistic equals the driver-side arithmetic
+    val ref = FreqSketch.deserialize(profile)
+    table.groupBy("part").agg(graft.sketch.FreqFunctions.freq_sketch(col("source"), 64))
+      .collect().foreach { r =>
+        val want = FreqDriftCheck.chiSquare(
+          FreqSketch.deserialize(r.getAs[Array[Byte]](1)), ref)
+        assert(verdicts.find(_.getInt(0) == r.getInt(0)).get.getDouble(4) == want)
+      }
+  }
+
+  test("fusion parity: a row-local check on another partition column stays on run()") {
+    val sharded = table.withColumn("shard", pmod(xxhash64(col("doc_id")), lit(3)).cast("int"))
+    val verdicts = assertFusedParity(Seq(
+      RowConstraintCheck(validator),
+      StatsCheck(Seq(ColumnStatsSpec("doc_id", maxNullRate = Some(0.5))), partCol = "shard")),
+      sharded)
+    assert(verdicts.filter(_.getString(1) == "stats:doc_id").map(_.getInt(0)).sorted ==
+      Seq(0, 1, 2))
+  }
+
+  test("known parts without rows: join-based checks report them, row-local checks do not") {
+    val parts = Seq(0, 1, 2, 3, 9)
+    val universe = spark.range(parts.length).select(
+      element_at(typedLit(parts), col("id").cast("int") + 1).as("part"))
+    def verdictParts(c: Check) = c.run(table).verdicts.select("part").collect()
+      .map(_.getInt(0)).sorted.toSeq
+    val uniq = UniquenessCheck("doc_id")
+    for (c <- Seq(uniq.withKnownParts(parts), uniq.withPartsUniverse(universe))) {
+      assert(verdictParts(c) == parts)
+      val empty = c.run(table).verdicts.where(col("part") === 9).head()
+      assert(empty.getBoolean(2) && empty.getLong(3) == 0L)
+    }
+    // row-local checks aggregate groupBy(part): only parts with rows
+    val bloom = ReferentialBloomCheck("source", vocab, "source",
+      expectedKeys = cfg.numSources.toLong)
+    for (c <- Seq(bloom.withKnownParts(parts), bloom.withPartsUniverse(universe)))
+      assert(verdictParts(c) == (0 until cfg.parts))
+  }
+
+  test("concurrent writes: a failed write surfaces, commits nothing and keeps both errors") {
+    import PipelineSpec.FailingCheck
+    def messages(t: Throwable): Seq[String] =
+      if (t == null) Seq.empty
+      else Option(t.getMessage).toSeq ++ messages(t.getCause) ++
+        t.getSuppressed.toSeq.flatMap(messages)
+    table.count() // materialize the fixture's own cache first
+    def attempt(check: Check): Throwable = {
+      val dir = Files.createTempDirectory("graft-pipe-fail").toString
+      val persisted = spark.sparkContext.getPersistentRDDs.keySet
+      val ex = intercept[Throwable] {
+        new ValidationPipeline(Seq(RowConstraintCheck(validator), check),
+          PipelineConfig(s"$dir/ckpt", s"$dir/out")).run(table)
+      }
+      assert(new Checkpoint(s"$dir/ckpt").committedParts().isEmpty)
+      // the cached per-part aggregate is released on failure too
+      assert(spark.sparkContext.getPersistentRDDs.keySet == persisted)
+      ex
+    }
+    val vio = attempt(FailingCheck(violations = true, verdicts = false))
+    assert(messages(vio).exists(_.contains("injected violations failure")), vio)
+    val ver = attempt(FailingCheck(violations = false, verdicts = true))
+    assert(messages(ver).exists(_.contains("injected verdicts failure")), ver)
+    // both fail: the verdicts error is thrown, the violations error rides
+    // it as a suppressed exception
+    val both = attempt(FailingCheck(violations = true, verdicts = true))
+    assert(messages(both).exists(_.contains("injected verdicts failure")), both)
+    assert(both.getSuppressed.toSeq.flatMap(messages)
+      .exists(_.contains("injected violations failure")), both)
   }
 
   test("tokens remain byte-identical through validation") {
@@ -428,5 +606,24 @@ class PipelineSpec extends SparkSpec {
     // matching contract -> run proceeds
     val ok = new ValidationPipeline(checks, cfgFor(table.schema)).run(table)
     assert(ok.rowsValidated == 1L)
+  }
+}
+
+object PipelineSpec {
+  /** A check whose violation and/or verdict frames fail when executed. */
+  final case class FailingCheck(violations: Boolean, verdicts: Boolean) extends Check {
+    val name = "failing"
+    def run(df: DataFrame): CheckResult = {
+      def boom(what: String) = raise_error(lit(s"injected $what failure")).cast("string")
+      val part = col(Check.PartCol).cast("int").as("part")
+      CheckResult(
+        if (!violations) Check.emptyViolations(df.sparkSession)
+        else df.select(part +: Check.violationType.fieldNames.toSeq.map(n =>
+          boom("violations").as(n)): _*),
+        df.groupBy(part).count().select(col("part"),
+          (if (verdicts) boom("verdicts") else lit(name)).as("check"),
+          lit(true).as("passed"), lit(0L).as("violation_count"),
+          lit(null).cast("double").as("metric_value")))
+    }
   }
 }
