@@ -44,23 +44,22 @@ trait Check extends Serializable {
     * same Check interface; this flag is the contract either way.) */
   def isGlobal: Boolean = false
 
-  /** Inject the partition universe as a literal list (e.g. from a table
-    * catalog). Standalone `run(df)` of a check that joins its per-part
+  /** Inject the partition universe as a one-column frame (first column =
+    * part). Standalone `run(df)` of a check that joins its per-part
     * results against the universe discovers partitions itself (a
     * distinct scan of the partition column); callers who know the
-    * universe hand it over so that scan never happens. Default: ignore
-    * (row-local checks aggregate `groupBy(part)` directly and never
-    * discover). */
-  def withKnownParts(parts: Seq[Int]): Check = this
-
-  /** Inject the partition universe as a LAZY (typically cached) DataFrame
-    * instead of a literal list. This is the hook the pipeline uses for
-    * checks that are not row-local: the universe is the pipeline's
-    * cached per-part aggregate, so no check repeats discovery. Custom checks that need a
-    * partition universe should override BOTH hooks (the in-repo checks
-    * do); a check overriding only withKnownParts falls back to its own
-    * distinct scan inside the pipeline. Default: ignore. */
+    * universe hand it over so that scan never happens. The pipeline
+    * passes its cached per-part aggregate, so no check repeats discovery.
+    * Default: ignore (row-local checks aggregate `groupBy(part)` directly
+    * and never discover). */
   def withPartsUniverse(parts: DataFrame): Check = this
+
+  /** [[withPartsUniverse]] with a literal list (e.g. from a table catalog). */
+  final def withKnownParts(parts: Seq[Int]): Check = {
+    val spark = org.apache.spark.sql.SparkSession.active
+    import spark.implicits._
+    withPartsUniverse(parts.toDF(Check.PartCol))
+  }
 }
 
 /** What a row-local check contributes to one evaluation over an input.
@@ -99,19 +98,26 @@ object RowLocalCheck {
   private val noViolations: Column =
     array().cast(ArrayType(Check.violationType, containsNull = false))
 
-  /** Row-local checks planned once each over `df` (grouped by `partCol`
-    * cast to int) and evaluated together:
+  /** Row-local checks planned once each over `df` (grouped by `keys`,
+    * then `partCol` cast to int) and evaluated together:
     *
     *  - [[violations]]: one projection of every check's doc ids and error
     *    arrays, then one explode of their concatenation;
-    *  - [[aggregate]]: one `groupBy(part)` carrying `n_rows` plus every
-    *    check's aggregates (partial + final hash aggregate; the shuffle
-    *    carries one row per part per task), reduced to every check's
-    *    verdict structs;
+    *  - [[aggregate]]: one `groupBy(keys, part)` carrying `n_rows` plus
+    *    every check's aggregates (partial + final hash aggregate; the
+    *    shuffle carries one row per group per task), reduced to every
+    *    check's verdict structs;
     *  - [[verdicts]]: one explode of those structs — a select over the
     *    aggregate frame, no further input scan.
+    *
+    * `keys` name columns of `df` that group ahead of the part and lead
+    * both aggregate and verdict rows: the batch pipeline passes none; a
+    * watermarked stream passes its event-time window
+    * ([[graft.streaming.StreamingValidation.windowedVerdicts]]), whose
+    * mergeable per-group aggregates are then the streaming state.
     */
-  final class Fused(checks: Seq[RowLocalCheck], df: DataFrame, partCol: String) {
+  final class Fused(checks: Seq[RowLocalCheck], df: DataFrame, partCol: String,
+                    keys: Seq[String] = Nil) {
     private val part = col(partCol).cast(IntegerType).as(Check.PartCol)
     private val plans = checks.map(_.plan(df))
     // two checks of one class (e.g. two StatsChecks) declare the same names
@@ -139,23 +145,31 @@ object RowLocalCheck {
       }
     }
 
-    /** Per part: `part`, `n_rows` and `verdicts`, the array of `extra`
-      * verdict structs (over `n_rows`) and every check's. Aggregates no
+    private val grouping = keys.map(col) :+ col(Check.PartCol)
+
+    /** Per (keys, part): the keys, `part`, `n_rows` and `verdicts`, the
+      * array of `extra` verdict structs (over `n_rows`, e.g.
+      * [[RowLocalCheck.rowCount]]) and every check's. Aggregates no
       * verdict reads are pruned from the plan. */
     def aggregate(extra: Seq[Column]): DataFrame = {
       val verdicts = extra ++ plans.zipWithIndex.flatMap { case (p, i) =>
         p.verdicts(n => col(aggName(i, n))) }
-      df.groupBy(part)
+      df.groupBy(keys.map(col) :+ part: _*)
         .agg(count(lit(1)).as("n_rows"), plans.zipWithIndex.flatMap { case (p, i) =>
           p.aggregates.map { case (n, c) => c.as(aggName(i, n)) } }: _*)
-        .select(col(Check.PartCol), col("n_rows"), array(verdicts: _*).as("verdicts"))
+        .select(grouping ++ Seq(col("n_rows"), array(verdicts: _*).as("verdicts")): _*)
     }
 
-    /** The verdict rows of an [[aggregate]] frame. */
+    /** The verdict rows of an [[aggregate]] frame, led by the keys. */
     def verdicts(agg: DataFrame): DataFrame =
-      agg.select(col(Check.PartCol), explode(col("verdicts")).as("v")).select(
-        Check.PartCol, "v.check", "v.passed", "v.violation_count", "v.metric_value")
+      agg.select(grouping :+ explode(col("verdicts")).as("v"): _*).select(
+        grouping ++ Seq("check", "passed", "violation_count", "metric_value")
+          .map(n => col(s"v.$n")): _*)
   }
+
+  /** The `row_count` verdict over an [[Fused.aggregate]] frame: always
+    * passed, the group's row count as its metric. */
+  val rowCount: Column = Check.verdict("row_count", lit(true), lit(0L), col("n_rows"))
 }
 
 object Check {
@@ -171,18 +185,11 @@ object Check {
     StructField("additional_properties", StringType),
     StructField("check", StringType)))
 
-  /** The partition universe: the pipeline-provided literal list when
-    * available (no input scan), else the pipeline's shared lazy universe
-    * frame, else a distinct scan of the partition column. */
-  def partsDf(df: DataFrame, knownParts: Seq[Int],
-              partCol: String = PartCol,
+  /** The partition universe: the injected universe frame when available
+    * (no input scan), else a distinct scan of the partition column. */
+  def partsDf(df: DataFrame, partCol: String = PartCol,
               universe: Option[DataFrame] = None): DataFrame =
-    if (knownParts.nonEmpty) {
-      val spark = df.sparkSession
-      import spark.implicits._
-      knownParts.toDF(partCol)
-    } else universe.map(_.toDF(partCol))
-      .getOrElse(df.select(col(partCol)).distinct())
+    universe.map(_.toDF(partCol)).getOrElse(df.select(col(partCol)).distinct())
 
   /** Verdict frame builder: every partition present in `df` gets a verdict
     * row even when it has zero violations (absent partitions must read as
@@ -190,12 +197,11 @@ object Check {
     * [, metric_value]). */
   def verdictsFromCounts(df: DataFrame, perPart: DataFrame, checkName: String,
                          metricValue: Column = lit(null).cast(DoubleType),
-                         knownParts: Seq[Int] = Nil,
                          partCol: String = PartCol,
                          universe: Option[DataFrame] = None): DataFrame = {
     // normalize the caller's partition column to the canonical name so a
     // check configured with partCol="day" builds the right universe
-    val parts = partsDf(df, knownParts, partCol, universe)
+    val parts = partsDf(df, partCol, universe)
       .select(col(partCol).as(PartCol))
     val counts = perPart.withColumnRenamed("part", "vpart")
     parts.join(counts, parts(PartCol) === counts("vpart"), "left")

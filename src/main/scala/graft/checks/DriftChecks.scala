@@ -21,11 +21,9 @@ final case class KsDriftCheck(
     threshold: Double = 0.05,
     bin: Column => Column = identity,
     partCol: String = Check.PartCol,
-    knownParts: Seq[Int] = Nil,
     partsUniverse: Option[DataFrame] = None) extends Check {
 
   val name = s"drift_ks:$column"
-  override def withKnownParts(parts: Seq[Int]): Check = copy(knownParts = parts)
   override def withPartsUniverse(parts: DataFrame): Check =
     copy(partsUniverse = Some(parts))
 
@@ -40,7 +38,7 @@ final case class KsDriftCheck(
 
     // replicate the (small) reference histogram per observed partition so
     // the CDF union is computed per part
-    val parts = Check.partsDf(df, knownParts, partCol, partsUniverse).toDF("part")
+    val parts = Check.partsDf(df, partCol, partsUniverse).toDF("part")
     val refPerPart = parts.crossJoin(broadcast(ref))
 
     val joined = obs.join(refPerPart, Seq("part", "bin"), "full_outer")
@@ -89,11 +87,9 @@ final case class Chi2DriftCheck(
     threshold: Double,
     keyTransform: Column => Column = identity,
     partCol: String = Check.PartCol,
-    knownParts: Seq[Int] = Nil,
     partsUniverse: Option[DataFrame] = None) extends Check {
 
   val name = s"drift_chi2:$keyName"
-  override def withKnownParts(parts: Seq[Int]): Check = copy(knownParts = parts)
   override def withPartsUniverse(parts: DataFrame): Check =
     copy(partsUniverse = Some(parts))
 
@@ -119,7 +115,7 @@ final case class Chi2DriftCheck(
     val refFrac = refHist.crossJoin(broadcast(refTotal))
       .select(col("key"), (col("r_cnt") / col("_rt")).as("p"))
 
-    val parts = Check.partsDf(df, knownParts, partCol, partsUniverse).toDF("part")
+    val parts = Check.partsDf(df, partCol, partsUniverse).toDF("part")
     val refPerPart = parts.crossJoin(broadcast(refFrac))
 
     val joined = obs.join(refPerPart, Seq("part", "key"), "full_outer")
@@ -166,12 +162,10 @@ final case class PsiDriftCheck(
     bin: Column => Column = identity,
     epsilon: Double = 1e-6,
     partCol: String = Check.PartCol,
-    knownParts: Seq[Int] = Nil,
     partsUniverse: Option[DataFrame] = None) extends Check {
 
   require(epsilon > 0.0, "epsilon must be positive (keeps PSI finite)")
   val name = s"drift_psi:$column"
-  override def withKnownParts(parts: Seq[Int]): Check = copy(knownParts = parts)
   override def withPartsUniverse(parts: DataFrame): Check =
     copy(partsUniverse = Some(parts))
 
@@ -189,7 +183,7 @@ final case class PsiDriftCheck(
     val refFrac = refHist.crossJoin(broadcast(refTotal))
       .select(col("bin"), (col("r_cnt") / col("_rt")).as("r"))
 
-    val parts = Check.partsDf(df, knownParts, partCol, partsUniverse).toDF("part")
+    val parts = Check.partsDf(df, partCol, partsUniverse).toDF("part")
     val refPerPart = parts.crossJoin(broadcast(refFrac))
 
     val joined = obs.join(refPerPart, Seq("part", "bin"), "full_outer")

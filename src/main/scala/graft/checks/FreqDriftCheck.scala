@@ -1,7 +1,7 @@
 package graft.checks
 
 import graft.sketch.{FreqFunctions, FreqSketch}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 
@@ -29,15 +29,21 @@ import org.apache.spark.sql.types.StringType
   * space-saving UPPER bound (the sketch offset) is used as the cell
   * count — per-cell error is ≤ offset + err, and the failure direction
   * under saturation is a drift FLAG, never a silent pass.
+  *
+  * `statistic` picks the score over the same cells: chi² (the default) or
+  * PSI (`freq_psi`, [[PsiDriftCheck]]'s statistic) — PSI is scale-free,
+  * so one threshold holds whatever a part's or a stream window's
+  * population.
   */
 final case class FreqDriftCheck(
     column: String,
     referenceSketch: Array[Byte],
     threshold: Double,
     capacity: Int = FreqSketch.DefaultCapacity,
-    partCol: String = Check.PartCol) extends RowLocalCheck {
+    partCol: String = Check.PartCol,
+    statistic: FreqDriftCheck.Statistic = FreqDriftCheck.Chi2) extends RowLocalCheck {
 
-  val name = s"drift_freq_chi2:$column"
+  val name = s"drift_freq_${statistic.name}:$column"
 
   def plan(df: DataFrame): RowLocalPlan = {
     FreqSketch.deserialize(referenceSketch) // validate before shipping
@@ -46,13 +52,19 @@ final case class FreqDriftCheck(
       aggregates = Seq("sketch" ->
         FreqFunctions.freq_sketch(col(column).cast(StringType), capacity)),
       verdicts = agg => {
-        val chi2 = FreqFunctions.freq_chi2(agg("sketch"), lit(referenceSketch))
-        Seq(Check.verdict(name, chi2 <= threshold, lit(0L), chi2))
+        val score = statistic.score(agg("sketch"), lit(referenceSketch))
+        Seq(Check.verdict(name, score <= threshold, lit(0L), score))
       })
   }
 }
 
 object FreqDriftCheck {
+  /** A drift statistic of an observed sketch against the reference. */
+  sealed abstract class Statistic(val name: String,
+                                  val score: (Column, Column) => Column)
+  case object Chi2 extends Statistic("chi2", FreqFunctions.freq_chi2)
+  case object Psi extends Statistic("psi", FreqFunctions.freq_psi)
+
   /** Build a reference profile sketch from a clean sample (run once,
     * persist the bytes in the profile/checkpoint table). */
   def buildProfile(df: DataFrame, column: String,

@@ -572,7 +572,7 @@ object Similarity {
     // touches the float corpus at all (AnnScaleBench measured the
     // inline path at ~3x the persisted path's scan cost)
     val qc = spreadForScan(
-      preQuantized.getOrElse(quantizeInt8(corpus, corpusId, corpusVec)))
+      preQuantized.getOrElse(quantizeInt8(corpus, corpusId, corpusVec)), corpusId)
       .select(col(corpusId).as("neighbor_id"), col("qvec").as("cq"))
       .withColumn("cn", sqrt(dotQuantized(col("cq"), col("cq")).cast("double")))
     val qq = broadcast(quantizeInt8(queries, queryId, queryVec)
@@ -610,10 +610,13 @@ object Similarity {
     * the persisted PQ scan 5× slower than inline purely from the 8-vs-64
     * partition read). Repartition up only when the input is
     * under-split; at cluster scale a real code table already reads as
-    * ≥ defaultParallelism splits and this is a no-op. */
-  private def spreadForScan(df: DataFrame): DataFrame = {
+    * ≥ defaultParallelism splits and this is a no-op. The spread hashes
+    * the (unique) row id rather than dealing rows round-robin, so a
+    * retried task rebuilds the same split whatever order its input
+    * arrives in. */
+  private def spreadForScan(df: DataFrame, idCol: String): DataFrame = {
     val want = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < want) df.repartition(want) else df
+    if (df.rdd.getNumPartitions < want) df.repartition(want, col(idCol)) else df
   }
 
   // ------------------------------------------------------------------
@@ -754,7 +757,7 @@ object Similarity {
     val codes = spreadForScan(preCodes
       .map(_.select(col(corpusId).as("neighbor_id"), col("pcode")))
       .getOrElse(corpus.select(col(corpusId).as("neighbor_id"),
-        pqEncodeCol(col(corpusVec), dim, codebooks).as("pcode"))))
+        pqEncodeCol(col(corpusVec), dim, codebooks).as("pcode"))), "neighbor_id")
       .where(col("pcode").isNotNull && !exists(col("pcode"), _.isNull))
     val lut = array((0 until m).map { s =>
       array(codebooks(s).map(cb =>

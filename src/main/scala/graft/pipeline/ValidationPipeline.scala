@@ -116,8 +116,7 @@ final class ValidationPipeline(checks: Seq[Check], cfg: PipelineConfig) {
     }
     val t0 = System.nanoTime()
     val fused = new RowLocalCheck.Fused(fusable, pending, cfg.partCol)
-    val perPart = fused.aggregate(
-      Seq(Check.verdict("row_count", lit(true), lit(0L), col("n_rows")))).persist()
+    val perPart = fused.aggregate(Seq(RowLocalCheck.rowCount)).persist()
     val universe = perPart.select(col("part"))
 
     // global checks see the full input (cross-partition semantics) but

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.Validator
+import graft.checks.RowLocalCheck
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -9,31 +9,16 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * compiled constraint Columns applied to a stream (`readStream` →
   * validate → `writeStream`), with watermarked windowed verdicts.
   *
-  * The row-level validator is a stateless narrow projection, so it adds
-  * no state store; only the verdict aggregation keeps (window × part)
-  * state, bounded by the watermark. At production scale the violations
-  * stream appends straight to the violations table while verdicts upsert
-  * per (window, part) — the streaming twin of the batch pipeline's
-  * outputs (FIXTURES.md §5).
+  * Row-level validation needs nothing stream-specific:
+  * `Validator.withValidation` and `Validator.violations(stream,
+  * Seq(idCol, tsCol))` are stateless narrow projections, so they add no
+  * state store. Only the verdict aggregation ([[windowedVerdicts]]) keeps
+  * (window × part) state, bounded by the watermark. At production scale
+  * the violations stream appends straight to the violations table while
+  * verdicts upsert per (window, part) — the streaming twin of the batch
+  * pipeline's outputs (FIXTURES.md §5).
   */
 object StreamingValidation {
-
-  /** Stream + `valid`/`errors` columns (stateless). */
-  def withValidation(stream: DataFrame, validator: Validator): DataFrame =
-    validator.withValidation(stream)
-
-  /** One violation row per error, with the event time carried through. */
-  def violations(stream: DataFrame, validator: Validator,
-                 idCol: String, tsCol: String): DataFrame =
-    withValidation(stream, validator)
-      .where(!col("valid"))
-      .select(col(idCol), col(tsCol), explode(col("errors")).as("error"))
-      .select(
-        col(idCol), col(tsCol),
-        col("error.path").as("path"),
-        col("error.keyword").as("keyword"),
-        col("error.message").as("message"),
-        col("error.additionalProperties").as("additional_properties"))
 
   /** Streaming twin of [[graft.checks.ReferentialBloomCheck]]: flag
     * events whose FK is DEFINITELY absent from a (persisted) dimension
@@ -169,103 +154,23 @@ object StreamingValidation {
         Encoders.product[DupEvent])
   }
 
-  /** Watermarked per-window KS drift against a PERSISTED profile sketch:
-    * the streaming twin of [[graft.checks.SketchDriftCheck]]. Each window
-    * aggregates one KLL sketch per (window × part) — the only state, and
-    * it is bounded by the watermark — and the KS distance against the
-    * profile blob is computed INSIDE the plan by `kll_ks`, so nothing is
-    * collected to the driver. Emits (window, part, check, passed,
-    * violation_count, metric_value), the batch verdict shape plus the
-    * window. */
-  def windowedSketchDrift(stream: DataFrame, column: String,
-                          referenceSketch: Array[Byte],
-                          tsCol: String, partCol: String,
-                          threshold: Double = 0.05,
-                          windowDuration: String = "1 minute",
-                          watermarkDelay: String = "2 minutes"): DataFrame = {
-    import graft.sketch.{functions => gf}
-    stream
-      .withWatermark(tsCol, watermarkDelay)
-      .groupBy(window(col(tsCol), windowDuration), col(partCol).as("part"))
-      .agg(gf.kll_sketch(col(column).cast("double")).as("sketch"))
-      // project the KS distance ONCE: kll_ks deserializes both sketches,
-      // and a multiply-referenced non-cheap alias is kept un-inlined by
-      // CollapseProject, so `passed` and `metric_value` share one eval
-      .withColumn("_ks", gf.kll_ks(col("sketch"), lit(referenceSketch)))
-      .select(
-        col("window"), col("part"),
-        lit(s"drift_kll_ks:$column").as("check"),
-        (col("_ks") <= threshold).as("passed"),
-        lit(0L).as("violation_count"),
-        col("_ks").as("metric_value"))
-  }
-
-  /** Watermarked per-window categorical drift against a persisted
-    * frequency profile: the streaming twin of
-    * [[graft.checks.FreqDriftCheck]], same shape as
-    * [[windowedSketchDrift]] — bounded per-(window × part) sketch state,
-    * chi² computed in-plan via `freq_chi2`. */
-  def windowedFreqDrift(stream: DataFrame, column: String,
-                        referenceSketch: Array[Byte],
-                        tsCol: String, partCol: String,
-                        threshold: Double,
-                        capacity: Int = graft.sketch.FreqSketch.DefaultCapacity,
-                        windowDuration: String = "1 minute",
-                        watermarkDelay: String = "2 minutes"): DataFrame = {
-    import graft.sketch.FreqFunctions
-    stream
-      .withWatermark(tsCol, watermarkDelay)
-      .groupBy(window(col(tsCol), windowDuration), col(partCol).as("part"))
-      .agg(FreqFunctions.freq_sketch(col(column).cast("string"), capacity)
-        .as("sketch"))
-      .withColumn("_chi2", FreqFunctions.freq_chi2(col("sketch"), lit(referenceSketch)))
-      .select(
-        col("window"), col("part"),
-        lit(s"drift_freq_chi2:$column").as("check"),
-        (col("_chi2") <= threshold).as("passed"),
-        lit(0L).as("violation_count"),
-        col("_chi2").as("metric_value"))
-  }
-
-  /** Watermarked per-window PSI drift against a persisted frequency
-    * profile — [[graft.checks.PsiDriftCheck]]'s streaming twin, riding
-    * the same mergeable sketch aggregate as [[windowedFreqDrift]]; PSI's
-    * scale-freeness matters most here, where window populations vary
-    * with traffic but the threshold must not. */
-  def windowedPsiDrift(stream: DataFrame, column: String,
-                       referenceSketch: Array[Byte],
+  /** Watermarked per-window verdicts of row-local checks: the batch
+    * verdict shape (part, check, passed, violation_count, metric_value)
+    * led by `window`, plus a `row_count` verdict per (window, part). One
+    * evaluator serves batch and stream: this is
+    * [[graft.checks.RowLocalCheck.Fused]] grouped by (window, part), so a
+    * window's verdict is the check's batch `run` over that window's rows.
+    * Every check's per-group aggregate (counters, KLL and frequency
+    * sketches, Bloom probes) is mergeable, so it is the only state, bounded
+    * by the watermark. Write it in update output mode: verdicts upsert per
+    * (window, part). */
+  def windowedVerdicts(stream: DataFrame, checks: Seq[RowLocalCheck],
                        tsCol: String, partCol: String,
-                       threshold: Double = 0.25,
-                       capacity: Int = graft.sketch.FreqSketch.DefaultCapacity,
                        windowDuration: String = "1 minute",
                        watermarkDelay: String = "2 minutes"): DataFrame = {
-    import graft.sketch.FreqFunctions
-    stream
-      .withWatermark(tsCol, watermarkDelay)
-      .groupBy(window(col(tsCol), windowDuration), col(partCol).as("part"))
-      .agg(FreqFunctions.freq_sketch(col(column).cast("string"), capacity)
-        .as("sketch"))
-      .withColumn("_psi", FreqFunctions.freq_psi(col("sketch"), lit(referenceSketch)))
-      .select(
-        col("window"), col("part"),
-        lit(s"drift_freq_psi:$column").as("check"),
-        (col("_psi") <= threshold).as("passed"),
-        lit(0L).as("violation_count"),
-        col("_psi").as("metric_value"))
+    val windowed = stream.withWatermark(tsCol, watermarkDelay)
+      .withColumn("window", window(col(tsCol), windowDuration))
+    val fused = new RowLocalCheck.Fused(checks, windowed, partCol, keys = Seq("window"))
+    fused.verdicts(fused.aggregate(Seq(RowLocalCheck.rowCount)))
   }
-
-  /** Watermarked per-window verdicts: (window, part, passed,
-    * violation_count, rows). */
-  def windowedVerdicts(stream: DataFrame, validator: Validator,
-                       tsCol: String, partCol: String,
-                       windowDuration: String = "1 minute",
-                       watermarkDelay: String = "2 minutes"): DataFrame =
-    withValidation(stream, validator)
-      .withWatermark(tsCol, watermarkDelay)
-      .groupBy(window(col(tsCol), windowDuration), col(partCol))
-      .agg(
-        bool_and(col("valid")).as("passed"),
-        sum(when(col("valid"), 0L).otherwise(size(col("errors")).cast("long")))
-          .as("violation_count"),
-        count(lit(1)).as("rows_validated"))
 }

@@ -363,6 +363,14 @@ class OpsSpec extends SparkSpec {
     }
   }
 
+  test("quantizedTopK: an under-split corpus is spread by its id, not round-robin") {
+    val plan = Similarity.quantizedTopK(vecs.coalesce(1), "vec_id", "embedding",
+      vecs.where(col("vec_id") < 5), "vec_id", "embedding", k = 5, rerank = 20)
+      .queryExecution.executedPlan.toString
+    assert(plan.contains("hashpartitioning(vec_id") &&
+      !plan.contains("RoundRobinPartitioning"), plan)
+  }
+
   // ---- product quantization ----
 
   lazy val pqCodebooks: Seq[Seq[Seq[Double]]] = {

@@ -1,5 +1,6 @@
 package graft
 
+import graft.checks.{FreqDriftCheck, RowConstraintCheck, SketchDriftCheck}
 import graft.streaming.StreamingValidation
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -98,8 +99,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming violations: stateless validate over a memory stream") {
     implicit val sqlCtx = spark.sqlContext
     val source = MemoryStream[Ev]
-    val q = StreamingValidation.violations(
-      source.toDF(), validator, "doc_id", "ts")
+    val q = validator.violations(source.toDF(), Seq("doc_id", "ts"))
       .writeStream.format("memory").queryName("sv_viol").outputMode("append").start()
     try {
       source.addData(
@@ -153,7 +153,7 @@ class StreamingSpec extends SparkSpec {
     val source = MemoryStream[Ev]
     val df = source.toDF().withColumn("part", lit(0))
     val q = StreamingValidation.windowedVerdicts(
-      df, validator, "ts", "part", "1 minute", "1 minute")
+      df, Seq(RowConstraintCheck(validator)), "ts", "part", "1 minute", "1 minute")
       .writeStream.format("memory").queryName("sv_verd").outputMode("update").start()
     try {
       source.addData(
@@ -161,12 +161,16 @@ class StreamingSpec extends SparkSpec {
         Ev("b", -1, Timestamp.valueOf("2026-01-01 00:00:20")),
         Ev("c", 5, Timestamp.valueOf("2026-01-01 00:01:10")))
       q.processAllAvailable()
-      val verd = spark.table("sv_verd")
-        .select(col("window.start").cast("string"), col("passed"),
-          col("violation_count"), col("rows_validated")).collect()
-        .map(r => (r.getString(0), r.getBoolean(1), r.getLong(2), r.getLong(3))).toSet
-      assert(verd.contains(("2026-01-01 00:00:00", false, 1L, 2L)))
-      assert(verd.contains(("2026-01-01 00:01:00", true, 0L, 1L)))
+      val out = spark.table("sv_verd")
+        .select(col("window.start").cast("string"), col("check"), col("passed"),
+          col("violation_count"), col("metric_value")).collect()
+      val verd = out.filter(_.getString(1) == "row_constraint")
+        .map(r => (r.getString(0), r.getBoolean(2), r.getLong(3))).toSet
+      val rows = out.filter(_.getString(1) == "row_count")
+        .map(r => r.getString(0) -> r.getDouble(4)).toMap
+      assert(verd.contains(("2026-01-01 00:00:00", false, 1L)))
+      assert(verd.contains(("2026-01-01 00:01:00", true, 0L)))
+      assert(rows == Map("2026-01-01 00:00:00" -> 2.0, "2026-01-01 00:01:00" -> 1.0))
     } finally q.stop()
   }
 
@@ -178,9 +182,9 @@ class StreamingSpec extends SparkSpec {
 
     val source = MemoryStream[Ev]
     val df = source.toDF().withColumn("part", lit(0))
-    val q = StreamingValidation.windowedSketchDrift(
-      df, "n_tok", profile, "ts", "part",
-      threshold = 0.1, windowDuration = "1 minute", watermarkDelay = "1 minute")
+    val q = StreamingValidation.windowedVerdicts(
+      df, Seq(SketchDriftCheck("n_tok", profile, threshold = 0.1)), "ts", "part",
+      windowDuration = "1 minute", watermarkDelay = "1 minute")
       .writeStream.format("memory").queryName("sv_drift").outputMode("update").start()
     try {
       // window 0: same distribution (1..50); window 1: shifted (+60)
@@ -190,7 +194,7 @@ class StreamingSpec extends SparkSpec {
         Ev(s"b$i", i + 60, Timestamp.valueOf("2026-01-01 00:01:10")))
       source.addData(w0 ++ w1: _*)
       q.processAllAvailable()
-      val out = spark.table("sv_drift")
+      val out = spark.table("sv_drift").where(col("check") =!= "row_count")
         .select(col("window.start").cast("string"), col("passed"),
           col("metric_value")).collect()
         .map(r => r.getString(0) -> ((r.getBoolean(1), r.getDouble(2)))).toMap
@@ -212,9 +216,8 @@ class StreamingSpec extends SparkSpec {
     // categorical column derived from n_tok so we can reuse Ev
     val df = source.toDF().withColumn("part", lit(0))
       .withColumn("cat", concat(lit("c"), col("n_tok") % 5))
-    val q = StreamingValidation.windowedFreqDrift(
-      df, "cat", profile, "ts", "part",
-      threshold = 10.0, capacity = 32,
+    val q = StreamingValidation.windowedVerdicts(
+      df, Seq(FreqDriftCheck("cat", profile, threshold = 10.0, capacity = 32)), "ts", "part",
       windowDuration = "1 minute", watermarkDelay = "1 minute")
       .writeStream.format("memory").queryName("sv_fdrift").outputMode("update").start()
     try {
@@ -225,7 +228,7 @@ class StreamingSpec extends SparkSpec {
         Ev(s"b$i", 5, Timestamp.valueOf("2026-01-01 00:01:10")))
       source.addData(w0 ++ w1: _*)
       q.processAllAvailable()
-      val out = spark.table("sv_fdrift")
+      val out = spark.table("sv_fdrift").where(col("check") =!= "row_count")
         .select(col("window.start").cast("string"), col("passed"),
           col("metric_value")).collect()
         .map(r => r.getString(0) -> ((r.getBoolean(1), r.getDouble(2)))).toMap
@@ -245,9 +248,9 @@ class StreamingSpec extends SparkSpec {
     val source = MemoryStream[Ev]
     val df = source.toDF().withColumn("part", lit(0))
       .withColumn("cat", concat(lit("c"), col("n_tok") % 5))
-    val q = StreamingValidation.windowedPsiDrift(
-      df, "cat", profile, "ts", "part",
-      threshold = 0.25, capacity = 32,
+    val q = StreamingValidation.windowedVerdicts(
+      df, Seq(FreqDriftCheck("cat", profile, threshold = 0.25, capacity = 32,
+        statistic = FreqDriftCheck.Psi)), "ts", "part",
       windowDuration = "1 minute", watermarkDelay = "1 minute")
       .writeStream.format("memory").queryName("sv_psidrift").outputMode("update").start()
     try {
@@ -257,7 +260,7 @@ class StreamingSpec extends SparkSpec {
         Ev(s"b$i", 5, Timestamp.valueOf("2026-01-01 00:01:10")))
       source.addData(w0 ++ w1: _*)
       q.processAllAvailable()
-      val out = spark.table("sv_psidrift")
+      val out = spark.table("sv_psidrift").where(col("check") =!= "row_count")
         .select(col("window.start").cast("string"), col("passed"),
           col("metric_value")).collect()
         .map(r => r.getString(0) -> ((r.getBoolean(1), r.getDouble(2)))).toMap
@@ -275,6 +278,76 @@ class StreamingSpec extends SparkSpec {
       assert(math.abs(batch - samePsi) < 1e-9,
         s"sketch PSI $samePsi != batch PSI $batch")
     } finally q.stop()
+  }
+
+  test("windowed KS: an all-NULL (window, part) drifts maximally, as in batch") {
+    implicit val sqlCtx = spark.sqlContext
+    val profileDf = spark.range(2000).select(((col("id") % 50) + 1).as("n_tok"))
+    val profile = SketchDriftCheck.buildProfile(profileDf, "n_tok")
+    val source = MemoryStream[Ev]
+    // window 0 carries values; in window 1 the checked column is all NULL
+    val df = source.toDF().withColumn("part", lit(0)).withColumn("x",
+      when(col("ts") < lit(Timestamp.valueOf("2026-01-01 00:01:00")), col("n_tok")))
+    val q = StreamingValidation.windowedVerdicts(
+      df, Seq(SketchDriftCheck("x", profile, threshold = 0.1)), "ts", "part",
+      windowDuration = "1 minute", watermarkDelay = "1 minute")
+      .writeStream.format("memory").queryName("sv_nulldrift").outputMode("update").start()
+    try {
+      source.addData((1 to 50).flatMap(i => Seq(
+        Ev(s"a$i", i, Timestamp.valueOf("2026-01-01 00:00:10")),
+        Ev(s"b$i", i, Timestamp.valueOf("2026-01-01 00:01:10")))): _*)
+      q.processAllAvailable()
+      val out = spark.table("sv_nulldrift").where(col("check") === "drift_kll_ks:x")
+        .select(col("window.start").cast("string"), col("passed"), col("metric_value"))
+        .collect().map(r => r.getString(0) -> ((r.get(1), r.get(2)))).toMap
+      assert(out("2026-01-01 00:00:00")._1 == true, out.toString)
+      assert(out("2026-01-01 00:01:00") == ((false, 1.0)), out.toString)
+    } finally q.stop()
+  }
+
+  test("windowed verdicts equal each check's batch run over the window's rows") {
+    implicit val sqlCtx = spark.sqlContext
+    val kllProfile = SketchDriftCheck.buildProfile(
+      spark.range(2000).select(((col("id") % 50) + 1).as("n_tok")), "n_tok")
+    val freqProfile = FreqDriftCheck.buildProfile(
+      spark.range(1000).select(concat(lit("c"), col("id") % 5).as("cat")), "cat", 32)
+    val checks = Seq(
+      RowConstraintCheck(validator),
+      SketchDriftCheck("n_tok", kllProfile, threshold = 0.1),
+      FreqDriftCheck("cat", freqProfile, threshold = 10.0, capacity = 32),
+      FreqDriftCheck("cat", freqProfile, threshold = 0.25, capacity = 32,
+        statistic = FreqDriftCheck.Psi))
+    def derive(df: org.apache.spark.sql.DataFrame) =
+      df.withColumn("part", pmod(col("n_tok"), lit(2)))
+        .withColumn("cat", concat(lit("c"), col("n_tok") % 5))
+    // window 0: in-profile values with a few invalid rows; window 1: a
+    // shifted, partly out-of-range distribution
+    val w0 = (1 to 60).map(i => Ev(if (i == 7) null else s"a$i",
+      if (i % 13 == 0) 0 else i, Timestamp.valueOf("2026-01-01 00:00:10")))
+    val w1 = (1 to 40).map(i =>
+      Ev(s"b$i", i * 5, Timestamp.valueOf("2026-01-01 00:01:10")))
+    val source = MemoryStream[Ev]
+    val q = StreamingValidation.windowedVerdicts(
+      derive(source.toDF()), checks, "ts", "part", "1 minute", "1 minute")
+      .writeStream.format("memory").queryName("sv_parity").outputMode("update").start()
+    val streamed = try {
+      source.addData(w0 ++ w1: _*)
+      q.processAllAvailable()
+      spark.table("sv_parity").where(col("check") =!= "row_count")
+        .select(col("window.start").cast("string"), col("part"), col("check"),
+          col("passed"), col("violation_count"), col("metric_value")).collect()
+        .map(r => (r.getString(0), r.getInt(1), r.getString(2)) ->
+          ((r.getBoolean(3), r.getLong(4), r.getDouble(5)))).toMap
+    } finally q.stop()
+    val batch = Seq("2026-01-01 00:00:00" -> w0, "2026-01-01 00:01:00" -> w1)
+      .flatMap { case (start, rows) =>
+        val df = derive(rows.map(e => (e.doc_id, e.n_tok, e.ts)).toDF("doc_id", "n_tok", "ts"))
+        checks.flatMap(_.run(df).verdicts.collect()).map(r =>
+          (start, r.getInt(0), r.getString(1)) ->
+            ((r.getBoolean(2), r.getLong(3), r.getDouble(4))))
+      }.toMap
+    assert(batch.size == 4 * 2 * 2)
+    assert(streamed == batch)
   }
 
   test("streaming paragraph dedup + LR scoring: stateless narrow twins") {
